@@ -25,7 +25,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pwir_zadanie_4_mapreduce_spark import catalog, laplace
+from pwir_zadanie_4_mapreduce_spark import catalog
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 from pwir_zadanie_4_mapreduce_spark.operators import ORACLES, QUERIES
 from pwir_zadanie_4_mapreduce_spark.operators.relational import q1_pricing_summary
@@ -89,38 +89,38 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _laplace_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference capability (SURVEY.md §7.2): N=8 red-black SOR to
-    convergence; golden-output tested against laplace-seq.exe in
-    tests/test_laplace.py (47 iterations, per-cell <= 1e-9)."""
+    convergence with the solver's default sizing; golden-output tested
+    against laplace-seq.exe in tests/test_laplace_blocked.py (47
+    iterations, full grid byte-for-byte)."""
     get_or_tune(spark)
-    result = laplace.solve(spark, n=8)
+    result = solve_blocked(spark, n=8)
     return result.grid.orderBy("i", "j")
 
 
 def _laplace_query_n4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second grid size through the same solver (N=4: 15 iterations,
-    golden-checked byte-for-byte in tests/test_laplace.py) — exposes
-    the N-parameterization in the registry, mirroring the reference's
-    CLI argument (laplace-seq.c:154)."""
+    golden-checked byte-for-byte in tests/test_laplace_blocked.py) —
+    exposes the N-parameterization in the registry, mirroring the
+    reference's CLI argument (laplace-seq.c:154)."""
     get_or_tune(spark)
-    result = laplace.solve(spark, n=4)
+    result = solve_blocked(spark, n=4)
     return result.grid.orderBy("i", "j")
 
 
 def _laplace_blocked_query_n8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal-blocked (deep-halo) solver, same capability as
-    laplace_sor_n8 but one shuffle per k sweeps instead of two per
-    sweep (laplace_blocked.py; ghost-zone exchange analog of
-    laplace-par.c:120-129). Forced multi-block so the registry entry
-    exercises the distributed path; bit-identical to the per-sweep
-    solver (tests/test_laplace_blocked.py)."""
+    """laplace_sor_n8 with a forced multi-block config (3 blocks, 8
+    sweeps per chunk: a ragged last block and a halo wider than a
+    block), so the registry exercises the distributed ghost-zone
+    exchange (laplace_blocked.py; analog of laplace-par.c:120-129)."""
     get_or_tune(spark)
     result = solve_blocked(spark, n=8, num_blocks=3, sweeps_per_job=8)
     return result.grid.orderBy("i", "j")
 
 
 def _laplace_blocked_query_n4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N=4 through the blocked solver (15 iterations, golden grid) —
-    oracle'd against the reference binary's exact output as VALUES."""
+    """N=4 with a forced multi-block config (15 iterations, golden
+    grid) — oracle'd against the reference binary's exact output as
+    VALUES."""
     get_or_tune(spark)
     result = solve_blocked(spark, n=4, num_blocks=2, sweeps_per_job=4)
     return result.grid.orderBy("i", "j")

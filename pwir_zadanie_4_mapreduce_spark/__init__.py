@@ -7,7 +7,9 @@ Layout
 ------
 - ``session``    SparkSession builder with scale-aware defaults
 - ``catalog``    table loading for the driver-supplied parquet fixtures
-- ``laplace``    the reference capability: iterative red-black SOR
+- ``laplace_blocked``  the reference capability: iterative red-black SOR
+                     (temporal-blocked solver ``solve_blocked``)
+- ``laplace``    the solver's shared pieces: omega/epsilon, result, sinks
 - ``operators``  relational / dedup / similarity / text / multimodal ops
 - ``sources``    readers (parquet/csv/json/range/generated grid)
 - ``functions``  reusable column expressions (cosine, tokenize, ...)

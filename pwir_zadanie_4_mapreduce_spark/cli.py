@@ -33,11 +33,6 @@ def _build_parser() -> argparse.ArgumentParser:
 
     lap = sub.add_parser("laplace", help="red-black SOR Laplace solve (reference program)")
     lap.add_argument("--verbose", action="store_true", help="print the final grid to stdout")
-    lap.add_argument(
-        "--blocked",
-        action="store_true",
-        help="temporal-blocked solver (k sweeps per shuffle; bit-identical output)",
-    )
     lap.add_argument("n", type=int, metavar="N", help="grid size, N >= 2")
 
     q = sub.add_parser("query", help="run a registered engine query")
@@ -80,13 +75,9 @@ def main(argv: list[str] | None = None) -> int:
     try:
         if args.cmd == "laplace":
             from pwir_zadanie_4_mapreduce_spark import laplace
+            from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 
-            if args.blocked:
-                from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
-
-                result = solve_blocked(spark, n=args.n)
-            else:
-                result = laplace.solve(spark, n=args.n)
+            result = solve_blocked(spark, n=args.n)
             laplace.print_stats(result)
             if args.verbose:
                 sys.stdout.write(laplace.format_grid(result, args.n))

@@ -1,12 +1,13 @@
-"""Temporal-blocked (deep-halo) red-black SOR — the throughput path.
+"""Temporal-blocked (deep-halo) red-black SOR — the Laplace solver.
 
-Same capability as :mod:`.laplace` (bit-faithful to
-`/root/reference/laplace-seq.c:184-209`), different physical plan.
-``laplace.solve`` pays two shuffles *per sweep* — the faithful analog
-of the reference's per-sweep halo exchange (laplace-par.c:120-129) —
-which on Spark costs ~1 s of stage scheduling/codegen per iteration at
-small N. This module applies the standard HPC *ghost-zone / temporal
-blocking* optimization to the Spark execution model:
+Reproduces the do-while of `laplace-seq.c:184-209` bit-faithfully
+(shared pieces — omega, epsilon, result type, sinks — live in
+:mod:`.laplace`). A per-cell Spark plan would pay a shuffle per color
+phase, two per sweep — the analog of the reference's per-sweep halo
+exchange (laplace-par.c:120-129) — which on Spark costs ~1 s of stage
+scheduling/codegen per iteration at small N (BASELINE.md). This module
+instead applies the standard HPC *ghost-zone / temporal blocking*
+optimization to the Spark execution model:
 
 - the grid state is ROW-oriented: one DataFrame row per grid row
   ``(i, vals: array<double>[N])`` — a 1-D row-block decomposition,
@@ -18,7 +19,7 @@ blocking* optimization to the Spark execution model:
   which read rows two away), via a single explode → hash shuffle on a
   remapped key precomputed so each block lands in its own partition;
 - each block then runs all ``k`` sweeps locally in vectorized numpy
-  inside ``mapInPandas`` — zero communication for k sweeps. Halo
+  inside ``mapInArrow`` — zero communication for k sweeps. Halo
   rows go stale one dependency-radius per sweep, but the owned rows
   sit ``>= 2k`` rows from any missing edge, so after k sweeps every
   owned row is *exactly* the value the sequential program computes;
@@ -34,7 +35,9 @@ trade: redundant halo compute for k× fewer synchronizations. At 100 TB
 scale (N ~ 10^5+) blocks hold thousands of rows, so a k of 32-64 costs
 <10% redundancy; the knobs are explicit parameters.
 
-Bit-exactness argument (verified by golden tests): within one phase
+Bit-exactness argument (verified against the reference binary's golden
+outputs and a pure-Python transcription of the C loop in
+tests/test_laplace_blocked.py): within one phase
 the C loop updates only cells of one color in place and reads only the
 opposite color (laplace-seq.c:190-199), so the phase is
 order-independent and elementwise numpy evaluation with the same
@@ -44,7 +47,6 @@ association — ``((up + down) + left) + right``, ``/ 4.0``, then
 
 from __future__ import annotations
 
-import math
 import time
 
 import numpy as np

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from pwir_zadanie_4_mapreduce_spark.catalog import load_table
 from pwir_zadanie_4_mapreduce_spark.functions.rounding import dround
+from pwir_zadanie_4_mapreduce_spark.laplace_blocked import cell_expr
 from pwir_zadanie_4_mapreduce_spark.operators.registry import register
 from pwir_zadanie_4_mapreduce_spark.functions.lineage import cut_lineage
 
@@ -64,15 +65,8 @@ def source_range_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("id") / n).cast("int").alias("i"),
         (F.col("id") % n).cast("int").alias("j"),
     )
-    v = (
-        F.when(F.col("i") == 0, 4.56)
-        .when(F.col("i") == n - 1, 9.85)
-        .when(F.col("j") == 0, 7.32)
-        .when(F.col("j") == n - 1, 6.88)
-        .otherwise(0.0)
-    )
     return (
-        ij.withColumn("v", v)
+        ij.withColumn("v", cell_expr(F.col("j"), n))
         .groupBy("i")
         .agg(_r4(F.sum("v")).alias("row_sum"), F.count("*").alias("n"))
         .orderBy("i")

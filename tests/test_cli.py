@@ -1,7 +1,7 @@
 """CLI front-end contract (reference O17): argument validation and
 the registry listing. The laplace/query subcommands start a Spark
-session, so their end-to-end paths are exercised by test_laplace and
-the operator tests; here we pin the parse/validation behavior."""
+session, so their end-to-end paths are exercised by test_laplace_blocked
+and the operator tests; here we pin the parse/validation behavior."""
 
 from __future__ import annotations
 
@@ -61,16 +61,6 @@ def test_stats_line_carries_breakdown(capsys):
     line = buf.getvalue()
     assert line.startswith("Statistics: duration(s)=0.250000 breakdown=0.050000 ")
     assert "#iters=15 " in line and "epsilon=0.0000029000" in line
-
-
-def test_blocked_flag_accepted():
-    """`laplace --blocked N` parses; N validation applies before any
-    Spark work either way."""
-    from pwir_zadanie_4_mapreduce_spark.cli import _build_parser, main
-
-    args = _build_parser().parse_args(["laplace", "--blocked", "4"])
-    assert args.blocked and args.n == 4
-    assert main(["laplace", "--blocked", "1"]) == 1  # N < 2 rejected
 
 
 def test_driver_sample_rotation_least_recently_sampled_first():

@@ -1,10 +1,12 @@
-"""Golden-output tests for the temporal-blocked solver
-(`laplace_blocked.solve_blocked`).
+"""Golden-output tests for the Laplace solver's execution knobs
+(`laplace_blocked.solve_blocked` with forced `num_blocks` and
+`sweeps_per_job`).
 
-Same oracle as test_laplace.py — the compiled reference binary's exact
-iteration counts / grids — plus cross-solver bit-equality: the blocked
-plan must be indistinguishable from the per-sweep plan, which is itself
-byte-exact against `laplace-seq.exe`.
+Same oracles as test_laplace.py — the compiled reference binary's
+output (FIXTURES.md §2) and `c_reference`, the pure-Python
+transcription of the C loop, which the solver must match bit for bit
+(grid, iteration count, final diff) at sizes and block/chunk
+configurations the binary's fixtures do not cover.
 
 The block/chunk knobs are deliberately exercised off the defaults
 (forced multi-block, tiny chunks, mid-chunk convergence) because at
@@ -13,23 +15,23 @@ test N the sizing heuristic would otherwise collapse to one block.
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from pwir_zadanie_4_mapreduce_spark import laplace
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 
-from tests.test_laplace import GOLDEN_N4, GOLDEN_N8_DIFF, GOLDEN_N8_ITERS, GOLDEN_N8_ROW1
+from tests.test_laplace import GOLDEN_N4, GOLDEN_N8, GOLDEN_N8_DIFF, GOLDEN_N8_ITERS, c_reference
 
 
 def test_n_below_2_rejected(spark):
+    # validated before any block sizing
     with pytest.raises(ValueError):
-        solve_blocked(spark, 1)
+        solve_blocked(spark, 1, num_blocks=2, sweeps_per_job=4)
 
 
 def test_n2_no_interior_cells(spark):
-    r = solve_blocked(spark, 2)
+    # one row per block, one sweep per chunk: still one sweep, diff 0
+    r = solve_blocked(spark, 2, num_blocks=2, sweeps_per_job=1)
     assert r.num_iterations == 1
     assert r.final_diff == 0.0
 
@@ -56,35 +58,28 @@ def test_n8_iterations_and_grid(spark):
     r = solve_blocked(spark, 8, num_blocks=3, sweeps_per_job=4)
     assert r.num_iterations == GOLDEN_N8_ITERS
     assert abs(r.final_diff - GOLDEN_N8_DIFF) < 1e-9
-    rows = r.grid.orderBy("i", "j").collect()
-    row1 = [rows[1 * 8 + j]["v"] for j in range(8)]
-    for got, want in zip(row1, GOLDEN_N8_ROW1):
-        assert math.isclose(got, want, abs_tol=1e-9)
+    assert laplace.format_grid(r, 8) == GOLDEN_N8
 
 
-def test_n8_bit_identical_to_per_sweep_solver(spark):
-    blocked = solve_blocked(spark, 8, num_blocks=2, sweeps_per_job=8)
-    per_sweep = laplace.solve(spark, 8)
-    assert blocked.num_iterations == per_sweep.num_iterations
-    assert laplace.format_grid(blocked, 8) == laplace.format_grid(per_sweep, 8)
-
-
-def test_odd_n_bit_identical_to_per_sweep_solver(spark):
-    """Odd n exercises the strided fallback path of the sweep kernel
-    (the dense-plane fast path requires even n); capped iterations
-    keep the per-sweep reference cheap while still comparing grids
-    byte-for-byte after multiple chunks."""
-    n = 9
-    blocked = solve_blocked(spark, n, num_blocks=2, sweeps_per_job=3, max_iterations=6)
-    per_sweep = laplace.solve(spark, n, max_iterations=6)
-    assert blocked.num_iterations == per_sweep.num_iterations == 6
-    assert laplace.format_grid(blocked, n) == laplace.format_grid(per_sweep, n)
+@pytest.mark.parametrize(
+    "n,num_blocks,k",
+    [(8, 2, 8), (9, 2, 3), (7, 3, 4), (11, 1, 32), (12, 4, 7)],
+    ids=["n8_b2_k8", "n9_b2_k3", "n7_b3_k4", "n11_b1_k32", "n12_b4_k7"],
+)
+def test_bit_identical_to_c_reference(spark, n, num_blocks, k):
+    """Exact float equality with the C transcription. Odd n runs the
+    kernel's strided path (the dense-plane path needs even n); every
+    case converges mid-chunk, so the redo path runs too."""
+    grid, iters, diff = c_reference(n)
+    r = solve_blocked(spark, n, num_blocks=num_blocks, sweeps_per_job=k)
+    assert (r.num_iterations, r.final_diff) == (iters, diff)
+    got = [row["v"] for row in r.grid.orderBy("i", "j").collect()]
+    assert got == [v for row in grid for v in row]
 
 
 def test_n16_stats_default_sizing(spark):
     # defaults (heuristic block count, k=32): 132 iterations, diff
-    # 0.0000056832 — the BASELINE.md row, fast enough here because the
-    # blocked solver is ~50× cheaper per iteration than per-sweep
+    # 0.0000056832 — the FIXTURES.md §2 stats row
     r = solve_blocked(spark, 16)
     assert r.num_iterations == 132
     assert abs(r.final_diff - 0.0000056832) < 1e-9

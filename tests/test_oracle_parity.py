@@ -72,7 +72,7 @@ def test_rows_only_queries_run(spark):
     """Queries without an oracle still must execute and be stable."""
     for name in sorted(set(QUERIES) - set(ORACLES)):
         if name.startswith("laplace"):
-            continue  # covered by test_laplace.py (slow)
+            continue  # covered by test_laplace_blocked.py
         spark.catalog.clearCache()
         df = QUERIES[name](spark, SMOKE_SF)
         assert df.count() >= 0, name

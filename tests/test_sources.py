@@ -119,10 +119,11 @@ def test_partitioned_parquet_write_prunes(spark):
 
 
 def test_python_datasource_grid_matches_make_grid(spark):
-    """The custom Python data source must serve the exact grid
-    make_grid generates, and split rows with the reference's
-    remainder rule (laplace-par.c:245-251: first N%P parts one wider)."""
-    from pwir_zadanie_4_mapreduce_spark import laplace
+    """The custom Python data source must serve the exact grid the
+    solver starts from (make_grid_rows, exploded to cells), and split
+    rows with the reference's remainder rule (laplace-par.c:245-251:
+    first N%P parts one wider)."""
+    from pwir_zadanie_4_mapreduce_spark.laplace_blocked import make_grid_rows
     from pwir_zadanie_4_mapreduce_spark.sources.grid_source import (
         grid_reader_partitions,
         make_laplace_grid_datasource,
@@ -139,7 +140,12 @@ def test_python_datasource_grid_matches_make_grid(spark):
         .load()
         .collect()
     )
-    want = laplace.make_grid(spark, 5).collect()
+    want = (
+        make_grid_rows(spark, 5)
+        .select("i", F.posexplode("vals").alias("j", "v"))
+        .select("i", F.col("j").cast("int"), "v")
+        .collect()
+    )
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     widths = [
