@@ -85,10 +85,12 @@ class LaplaceResult:
     omega: float
     epsilon: float
     duration_s: float
-    # Cumulative wall time of the per-chunk max-diff reduction actions
-    # — the analog of the reference's `breakdown` accumulator, which
-    # sums the time the parallel program spends in MPI exchange/reduce
-    # (laplace-par.c:177,391-392, printed at :541).
+    # Cumulative wall time the driver spends reading each chunk's merged
+    # max-diff accumulator — the analog of the reference's `breakdown`
+    # accumulator, which sums the time the parallel program spends in
+    # MPI exchange/reduce (laplace-par.c:177,391-392, printed at :541).
+    # The reduce itself runs inside each chunk's job, so this stays
+    # near zero; the exchange is part of the chunk's job time.
     breakdown_s: float = 0.0
 
 
@@ -114,9 +116,9 @@ def format_grid(result: LaplaceResult, n: int) -> str:
 
 def print_stats(result: LaplaceResult, file=sys.stderr) -> None:
     """O15 stats sink. Field order mirrors the parallel reference's
-    stats line (laplace-par.c:541): duration, breakdown (cumulative
-    reduce/exchange time — see LaplaceResult.breakdown_s), #iters,
-    diff, epsilon."""
+    stats line (laplace-par.c:541): duration, breakdown (time spent
+    reading the merged per-chunk maxima; the reduce rides the chunk
+    jobs — see LaplaceResult.breakdown_s), #iters, diff, epsilon."""
     print(
         f"Statistics: duration(s)={result.duration_s:.6f} "
         f"breakdown={result.breakdown_s:.6f} "

@@ -17,7 +17,9 @@ optimization to the Spark execution model:
   ``2k``-row halo on each side (one red-black sweep has data
   dependency radius 2: phase 1 reads phase 0's values one row away,
   which read rows two away), via a single explode → hash shuffle on a
-  remapped key precomputed so each block lands in its own partition;
+  remapped key precomputed so each block lands in its own partition.
+  With one block there is no halo to ship: the grid is one partition
+  and the chunk reads it in place, with no exchange;
 - each block then runs all ``k`` sweeps locally in vectorized numpy
   inside ``mapInArrow`` — zero communication for k sweeps. Halo
   rows go stale one dependency-radius per sweep, but the owned rows
@@ -27,13 +29,18 @@ optimization to the Spark execution model:
   laplace-par.c:504) falls out for free: each phase updates a
   disjoint color set, owned cells are valid at every intermediate
   sweep, so the block-local owned-row maxima reduce to the exact
-  global maximum with one tiny agg per chunk.
+  global maximum. The blocks merge them into a driver accumulator
+  whose merge is an elementwise max, inside the chunk's own job.
 
-Communication drops from ``2·iters`` shuffles to ``iters/k`` — with
-the fan-out factor ``1 + 4k/rows_per_block`` as the classic ghost-zone
-trade: redundant halo compute for k× fewer synchronizations. At 100 TB
-scale (N ~ 10^5+) blocks hold thousands of rows, so a k of 32-64 costs
-<10% redundancy; the knobs are explicit parameters.
+The reduce needs no job of its own, so a one-block chunk is exactly
+one Spark job: a solve runs ``iters/k`` jobs plus two for set-up and
+one for the mid-chunk redo. With more than one block each chunk adds
+one shuffle (whose map stage adaptive execution runs as a job of its
+own), against ``2·iters`` shuffles for a per-cell plan, with the
+fan-out factor ``1 + 4k/rows_per_block`` as the classic ghost-zone
+trade: redundant halo compute for k× fewer synchronizations. At
+100 TB scale (N ~ 10^5+) blocks hold thousands of rows, so a k of
+32-64 costs <10% redundancy; the knobs are explicit parameters.
 
 Bit-exactness argument (verified against the reference binary's golden
 outputs and a pure-Python transcription of the C loop in
@@ -125,14 +132,14 @@ def _sweeps_factory():
                 if j0 >= n - 1:
                     continue
                 rows = slice(r0, rhi, 2)
-                rs = np.arange(r0, rhi, 2)
-                own_rows = (rs >= o_lo) & (rs < o_hi)
-                per_color.append((rows, j0, own_rows))
+                # owned rows of this view: one contiguous range of it
+                own = slice(len(range(r0, o_lo, 2)), len(range(r0, o_hi, 2)))
+                per_color.append((rows, j0, own))
             subsets.append(per_color)
         for _ in range(k):
             sweep_max = 0.0
             for per_color in subsets:
-                for rows, j0, own_rows in per_color:
+                for rows, j0, own in per_color:
                     cur = arr[rows, j0 : n - 1 : 2]
                     up = arr[rows.start - 1 : rows.stop - 1 : 2, j0 : n - 1 : 2]
                     down = arr[rows.start + 1 : rows.stop + 1 : 2, j0 : n - 1 : 2]
@@ -145,12 +152,12 @@ def _sweeps_factory():
                     tmp /= 4.0
                     # (1 - ω)·v + ω·tmp — laplace-seq.c:198
                     new = (1.0 - omega) * cur + omega * tmp
-                    if own_rows.any():
-                        d = np.abs(cur[own_rows] - new[own_rows])
-                        if d.size:
-                            phase_max = float(d.max())
-                            if phase_max > sweep_max:
-                                sweep_max = phase_max
+                    if own.start < own.stop:
+                        d = np.subtract(cur[own], new[own], out=tmp[own])
+                        np.abs(d, out=d)
+                        phase_max = float(d.max())
+                        if phase_max > sweep_max:
+                            sweep_max = phase_max
                     arr[rows, j0 : n - 1 : 2] = new
             diffs.append(sweep_max)
         return diffs
@@ -197,8 +204,8 @@ def _sweeps_factory():
                 rcount = len(range(r0, rhi, 2))
                 q0 = (r0 - start[p]) // 2
                 u0 = (r0 - 1 - start[1 - p]) // 2
-                rs = np.arange(r0, rhi, 2)
-                own_rows = (rs >= o_lo) & (rs < o_hi)
+                # owned target rows: one contiguous range of the task's rows
+                own = slice(len(range(r0, o_lo, 2)), len(range(r0, o_hi, 2)))
                 tasks.append(
                     (
                         c,
@@ -209,7 +216,7 @@ def _sweeps_factory():
                         ms,
                         slice(ms.start - 1 + j_par, ms.stop - 1 + j_par),  # left
                         slice(ms.start + j_par, ms.stop + j_par),  # right
-                        own_rows,
+                        own,
                         np.empty((rcount, width)),  # tmp buffer
                         np.empty((rcount, width)),  # new buffer
                     )
@@ -217,7 +224,7 @@ def _sweeps_factory():
         diffs: list[float] = []
         for _ in range(k):
             sweep_max = 0.0
-            for c, p, qs, us, ds, ms, lf, rt, own_rows, tmp, new in tasks:
+            for c, p, qs, us, ds, ms, lf, rt, own, tmp, new in tasks:
                 tgt = planes[c][p]
                 src_ud = planes[1 - c][1 - p]
                 src_lr = planes[1 - c][p]
@@ -231,13 +238,13 @@ def _sweeps_factory():
                 np.multiply(cur, (1.0 - omega), out=new)
                 np.multiply(tmp, omega, out=tmp)
                 new += tmp
-                if own_rows.any():
-                    d = cur[own_rows] - new[own_rows]
+                if own.start < own.stop:
+                    # |cur - new| into the now-free tmp rows
+                    d = np.subtract(cur[own], new[own], out=tmp[own])
                     np.abs(d, out=d)
-                    if d.size:
-                        phase_max = float(d.max())
-                        if phase_max > sweep_max:
-                            sweep_max = phase_max
+                    phase_max = float(d.max())
+                    if phase_max > sweep_max:
+                        sweep_max = phase_max
                 tgt[qs, ms] = new
             diffs.append(sweep_max)
         # scatter the planes back into row-major layout
@@ -269,11 +276,36 @@ def _sweeps_factory():
 _run_local_sweeps = _sweeps_factory()
 
 
-def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int):
+def _elementwise_max():
+    """AccumulatorParam whose merge is an elementwise max over
+    per-sweep lists. Max is idempotent: Spark may merge an update made
+    in a transformation more than once when it computes a partition
+    again (a recomputed stage), and the maxima stay the same. Built in a
+    function so the class cloudpickles by value, like the sweep function
+    above."""
+    from pyspark.accumulators import AccumulatorParam
+
+    class ElementwiseMax(AccumulatorParam):
+        def zero(self, value):
+            return [0.0] * len(value)
+
+        def addInPlace(self, value1, value2):
+            return [max(a, b) for a, b in zip(value1, value2)]
+
+    return ElementwiseMax()
+
+
+def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int, maxima):
     """Build the mapInArrow kernel for one chunk of ``k`` sweeps.
 
-    Each task's partition holds one block (plus halo) by construction —
-    the solver hash-repartitions on a remapped key chosen so every
+    It emits each block's owned rows as ``(i, vals)``. Each block's
+    per-sweep owned-row maxima go into the ``maxima`` accumulator (the
+    Allreduce(MAX) analog, laplace-par.c:504), which the driver reads
+    once the chunk's job returns.
+
+    Each task's partition holds one block (plus halo) by construction.
+    With one block the grid is a single partition. With more, the
+    solver hash-repartitions on a remapped key chosen so every
     block's Murmur3 partition is distinct (see solve_blocked), unlike
     hash-groupBy where the birthday paradox routinely co-locates two
     blocks in one task and doubles the chunk's wall time (measured:
@@ -318,6 +350,7 @@ def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int):
             own_lo = b * rows_per_block
             own_hi = min(n, own_lo + rows_per_block)
             diffs = _run_local_sweeps(arr, i0, n, omega, k, own_lo, own_hi)
+            maxima.add(diffs)
             keep = (ivals >= own_lo) & (ivals < own_hi)
             out = arr[keep]
             m = out.shape[0]
@@ -327,21 +360,9 @@ def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int):
                 pa.array(np.arange(m + 1, dtype=np.int32) * n, type=pa.int32()),
                 pa.array(out.reshape(-1), type=pa.float64()),
             )
-            # per-sweep owned-row maxima ride the first owned row only
-            # (null elsewhere) — one tiny array per block per chunk,
-            # collected driver-side for the convergence check (the
-            # Allreduce(MAX) analog, laplace-par.c:504)
-            diffs_arr = pa.array(
-                [[float(d) for d in diffs]] + [None] * (m - 1),
-                type=pa.list_(pa.float64()),
-            )
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ivals[keep].astype(np.int32), type=pa.int32()),
-                    vals_arr,
-                    diffs_arr,
-                ],
-                names=["i", "vals", "diffs"],
+                [pa.array(ivals[keep].astype(np.int32), type=pa.int32()), vals_arr],
+                names=["i", "vals"],
             )
 
     return kernel
@@ -441,13 +462,24 @@ def solve_blocked(
             F.explode(F.sequence(first, last)).alias("b"), "i", "vals"
         ).withColumn("b", F.col("b").cast("int"))
 
+    maxima = spark.sparkContext.accumulator([0.0], _elementwise_max())
+
     def run_chunk(rows: DataFrame, k: int) -> DataFrame:
-        schema = "i int, vals array<double>, diffs array<double>"
-        return (
-            fan_out(rows, k)
-            .withColumn("pk", remap_expr.cast("int"))
-            .repartition(num_parts, "pk")
-            .mapInArrow(_chunk_kernel(n, omega, k, rows_per_block), schema=schema)
+        maxima.value = [0.0] * k
+        if nb > 1:
+            rows = (
+                fan_out(rows, k)
+                .withColumn("pk", remap_expr.cast("int"))
+                .repartition(num_parts, "pk")
+            )
+        else:
+            # one block: the input is already one partition (the range
+            # checkpoint below or the previous chunk's output), so the
+            # kernel reads it in place, with no exchange
+            rows = rows.select(F.lit(0).alias("b"), "i", "vals")
+        return rows.mapInArrow(
+            _chunk_kernel(n, omega, k, rows_per_block, maxima),
+            schema="i int, vals array<double>",
         )
 
     chunk_start, cur_ids = checkpoint_tracked(
@@ -465,13 +497,13 @@ def solve_blocked(
             if k <= 0:
                 break
         chunk_end, end_ids = checkpoint_tracked(run_chunk(chunk_start, k))
+        # the chunk's tasks merged their maxima before its job returned
         tr = time.monotonic()
-        per_block = chunk_end.where(F.col("diffs").isNotNull()).select("diffs").collect()
-        maxes = [max(row["diffs"][s] for row in per_block) for s in range(k)]
+        maxes = maxima.value
         breakdown_s += time.monotonic() - tr
         converged_at = next((s for s in range(k) if maxes[s] <= epsilon), None)
         if converged_at is None or converged_at == k - 1:
-            chunk_start = chunk_end.drop("diffs")
+            chunk_start = chunk_end
             release_checkpoints(spark, cur_ids)  # prev chunk's grid
             cur_ids = end_ids
             num_iterations += k
@@ -483,9 +515,7 @@ def solve_blocked(
             # grid state matches the reference's stop-after-converged-
             # sweep semantics bit-for-bit
             redo = converged_at + 1
-            chunk_start, redo_ids = checkpoint_tracked(
-                run_chunk(chunk_start, redo).drop("diffs")
-            )
+            chunk_start, redo_ids = checkpoint_tracked(run_chunk(chunk_start, redo))
             release_checkpoints(spark, cur_ids | end_ids)
             cur_ids = redo_ids
             num_iterations += redo

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import pytest
 
-from pwir_zadanie_4_mapreduce_spark import laplace
+from pwir_zadanie_4_mapreduce_spark import laplace, laplace_blocked
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 
 from tests.test_laplace import GOLDEN_N4, GOLDEN_N8, GOLDEN_N8_DIFF, GOLDEN_N8_ITERS, c_reference
@@ -117,3 +117,72 @@ def test_chunking_invariance_bit_exact(spark):
         r = solve_blocked(spark, n, num_blocks=nb, sweeps_per_job=k)
         assert r.num_iterations == base.num_iterations, (nb, k)
         assert laplace.format_grid(r, n) == base_grid, (nb, k)
+
+
+def _solve_counting_jobs(spark, group, **kwargs):
+    """Run ``solve_blocked(spark, **kwargs)`` under job group ``group``;
+    return the result and the number of Spark jobs the solve ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        r = solve_blocked(spark, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return r, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_job_per_chunk_single_block(spark, monkeypatch):
+    """Each chunk is one Spark job: the convergence maxima ride the
+    chunk's own job (no separate reduce), and a one-block solve builds
+    no exchange. N=16 converges at 132: k=4 runs 33 chunks, k=8 runs 17
+    plus a redo; the set-up jobs are the same for both."""
+    plans: list[str] = []
+    real = laplace_blocked.checkpoint_tracked
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df)
+
+    monkeypatch.setattr(laplace_blocked, "checkpoint_tracked", spy)
+    r4, jobs4 = _solve_counting_jobs(spark, "laplace-k4", n=16, num_blocks=1, sweeps_per_job=4)
+    r8, jobs8 = _solve_counting_jobs(spark, "laplace-k8", n=16, num_blocks=1, sweeps_per_job=8)
+    assert r4.num_iterations == r8.num_iterations == 132
+    assert jobs4 - jobs8 == 33 - 18
+    chunk_plans = [p for p in plans if "MapInArrow" in p]
+    assert len(chunk_plans) == 33 + 18
+    assert not [p for p in chunk_plans if "Exchange" in p]
+    # the same probe sees the halo exchange of a two-block solve
+    plans.clear()
+    solve_blocked(spark, 8, num_blocks=2, sweeps_per_job=8)
+    chunk_plans = [p for p in plans if "MapInArrow" in p]
+    assert chunk_plans and all("Exchange" in p for p in chunk_plans)
+
+
+@pytest.mark.parametrize(
+    "n,num_blocks,k",
+    [(12, 1, 5), (12, 3, 5), (9, 2, 3)],
+    ids=["n12_b1_k5", "n12_b3_k5", "n9_b2_k3"],
+)
+def test_reliable_checkpoint_bit_identical(spark, monkeypatch, n, num_blocks, k):
+    """The maxima accumulator under reliable checkpoints, where each
+    chunk's job is the checkpoint-file write: grid, iteration count and
+    final diff stay exact."""
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    grid, iters, diff = c_reference(n)
+    r = solve_blocked(spark, n, num_blocks=num_blocks, sweeps_per_job=k)
+    assert (r.num_iterations, r.final_diff) == (iters, diff)
+    got = [row["v"] for row in r.grid.orderBy("i", "j").collect()]
+    assert got == [v for row in grid for v in row]
+
+
+def test_maxima_merge_is_idempotent():
+    """Spark may merge an accumulator update made in a transformation
+    more than once when it computes a partition again; merging a
+    block's maxima twice must leave the chunk's maxima unchanged."""
+    param = laplace_blocked._elementwise_max()
+    once = param.addInPlace(param.zero([0.0] * 3), [0.5, 0.25, 0.0])
+    once = param.addInPlace(once, [0.125, 0.75, 0.0])
+    assert once == [0.5, 0.75, 0.0]
+    assert param.addInPlace(once, [0.125, 0.75, 0.0]) == once

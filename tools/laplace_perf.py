@@ -6,8 +6,9 @@ Usage: python tools/laplace_perf.py N [sweeps_per_job] [cpus] [--blocks NB]
 Runs ``laplace_blocked.solve_blocked``; ``--blocks`` overrides its
 block-count heuristic (the BASELINE.md rows at N >= 1024 used explicit
 counts). Prints the reference-format stats line plus job/chunk
-accounting so the Spark-vs-C ratio in BASELINE.md is a measured number,
-not an argument.
+accounting (the solve runs under a job group; ``jobs=`` is the number
+of Spark jobs it ran, beside the chunk count) so the Spark-vs-C ratio in
+BASELINE.md is a measured number, not an argument.
 """
 from __future__ import annotations
 
@@ -39,11 +40,15 @@ def main() -> None:
         cpus=cpus,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
+    sc = spark.sparkContext
+    sc.setJobGroup("laplace-perf", f"solve_blocked N={n}", False)
     res = solve_blocked(spark, n, num_blocks=num_blocks, sweeps_per_job=sweeps)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # status store up to date
+    jobs = len(sc.statusTracker().getJobIdsForGroup("laplace-perf"))
     laplace.print_stats(res, file=sys.stdout)
     print(
         f"config: N={n} sweeps_per_job={sweeps} cpus={cpus} "
-        f"chunks~={(res.num_iterations + sweeps - 1) // sweeps} "
+        f"chunks~={(res.num_iterations + sweeps - 1) // sweeps} jobs={jobs} "
         f"s_per_iter={res.duration_s / max(1, res.num_iterations):.4f}"
     )
     spark.stop()
